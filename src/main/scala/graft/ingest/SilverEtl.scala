@@ -21,8 +21,10 @@ import scala.util.matching.Regex
   *     nodes in one plan). Alignment is still strictly by name.
   *   - Every stage is a pure function; the driver never collects fix-grain
   *     data.
-  *   - The quarantine split computes the invalid-coordinate predicate once
-  *     and reuses the flagged frame for both outputs (etl.py:590-608).
+  *   - The pipeline ends in ONE flagged frame carrying `is_invalid_coord`
+  *     ([[flagged]]); the valid and quarantined outputs are filters of it
+  *     (etl.py:590-608). `SilverJob` materializes that frame once and
+  *     feeds both sinks from it, so the ETL runs once per batch.
   */
 object SilverEtl {
 
@@ -40,14 +42,20 @@ object SilverEtl {
 
   // ---------------------------------------------------------------- scans
 
-  /** S1 — detect CSV vs JSON under a directory (etl.py:40-61). Uses the
-    * binaryFile reader so it works against any Hadoop-compatible FS. */
+  /** S1 — detect CSV vs JSON under a directory (etl.py:40-61). A
+    * `FileSystem.globStatus` listing, so it works against any
+    * Hadoop-compatible FS without launching a Spark job. Names starting
+    * with `_` or `.` (commit markers, checksums) are skipped, as Spark's
+    * own file index skips them. */
   def detectFileFormat(spark: SparkSession, dir: String): String = {
-    def existsAny(glob: String): Boolean =
-      try spark.read.format("binaryFile").load(glob).limit(1).count() > 0
-      catch { case _: Exception => false }
-    if (dir.endsWith(".json") || existsAny(s"$dir/*.json")) "json"
-    else if (dir.endsWith(".csv") || existsAny(s"$dir/*.csv")) "csv"
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def existsAny(ext: String): Boolean =
+      Option(fs.globStatus(new Path(s"$dir/*.$ext"))).exists(_.exists { st =>
+        val name = st.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      })
+    if (dir.endsWith(".json") || existsAny("json")) "json"
+    else if (dir.endsWith(".csv") || existsAny("csv")) "csv"
     else "csv" // default; the read will fail naturally (etl.py:60-61)
   }
 
@@ -366,19 +374,24 @@ object SilverEtl {
 
   // ------------------------------------------------- quarantine split (P12)
 
-  /** P12 — invalid-coordinate predicate + split. One flagged frame feeds
-    * both outputs; callers persist it if they consume both at scale
-    * (etl.py:590-608). */
-  def splitByCoordBounds(df: DataFrame, b: CoordBounds): (DataFrame, DataFrame) = {
+  /** P12 — invalid-coordinate predicate as the `is_invalid_coord` flag
+    * (etl.py:590-608). Never NULL: a NULL coordinate is not out of
+    * bounds. */
+  def flagCoordBounds(df: DataFrame, b: CoordBounds): DataFrame = {
     val invalidCoord =
       (col("longitude").isNotNull &&
         (col("longitude") < b.lonMin || col("longitude") > b.lonMax)) ||
         (col("latitude").isNotNull &&
           (col("latitude") < b.latMin || col("latitude") > b.latMax))
-    val flagged = df.withColumn("is_invalid_coord", invalidCoord)
+    df.withColumn("is_invalid_coord", invalidCoord)
+  }
+
+  /** P12 — split a flagged frame into (valid, invalid), both without the
+    * flag. Each side is a filter of the same frame, so materialize it
+    * first if both are consumed. */
+  def splitFlagged(flagged: DataFrame): (DataFrame, DataFrame) =
     (flagged.filter(!col("is_invalid_coord")).drop("is_invalid_coord"),
       flagged.filter(col("is_invalid_coord")).drop("is_invalid_coord"))
-  }
 
   /** P14 — empty-string → NULL normalization for seed text columns
     * (dimensions.py:346-353). */
@@ -389,12 +402,10 @@ object SilverEtl {
   // ------------------------------------------------------------- pipeline
 
   /** The full Silver transformation from a raw landing DataFrame (either
-    * shape) to (valid, quarantined) telemetry. Mirrors etl.py:main's
-    * dataflow: round fields → explode → derive → nine_number → geometry →
-    * dedup → coordinate split. */
-  def transform(
-      landing: DataFrame,
-      cfg: SilverConfig): (DataFrame, DataFrame) = {
+    * shape) to telemetry flagged with `is_invalid_coord`. Mirrors
+    * etl.py:main's dataflow: round fields → explode → derive → nine_number
+    * → geometry → dedup → coordinate flag. */
+  def flagged(landing: DataFrame, cfg: SilverConfig): DataFrame = {
     val withRounds = withRoundFields(landing, cfg)
     val exploded =
       if (landing.columns.contains("locations"))
@@ -406,19 +417,20 @@ object SilverEtl {
         explodeCsvLocations(withRounds, idxs)
       }
     val derived = withGeometry(withNineNumber(deriveTelemetry(exploded), cfg.topology))
-    splitByCoordBounds(dedupFixes(derived), cfg.bounds)
+    flagCoordBounds(dedupFixes(derived), cfg.bounds)
   }
 
-  /** End-to-end read + transform from a landing directory (S1 → S2/S3 →
-    * transform). */
-  def run(spark: SparkSession, landingDir: String, cfg: SilverConfig)
-      : (DataFrame, DataFrame) = {
-    val landing = detectFileFormat(spark, landingDir) match {
+  /** [[flagged]] split into (valid, quarantined) telemetry. */
+  def transform(landing: DataFrame, cfg: SilverConfig): (DataFrame, DataFrame) =
+    splitFlagged(flagged(landing, cfg))
+
+  /** S1 → S2/S3: the raw landing frame of a landing directory, either
+    * shape; [[flagged]] turns it into telemetry. */
+  def read(spark: SparkSession, landingDir: String): DataFrame =
+    detectFileFormat(spark, landingDir) match {
       case "json" =>
         readJson(spark,
           if (landingDir.endsWith(".json")) landingDir else s"$landingDir/*.json")
       case _ => readCsvUnion(spark, landingDir)
     }
-    transform(landing, cfg)
-  }
 }

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.tables.ParquetTable
@@ -30,27 +31,34 @@ object SilverJob {
     val registry = s"$warehouseDir/ingestion_log"
     IngestionRegistry.log(spark, registry, cfg.courseId, cfg.ingestDate,
       "started", 0L, landingDir, runSeq)
+    val tablePath = s"$warehouseDir/fact_telemetry_event"
     try {
-      val (valid0, invalid) = SilverEtl.run(spark, landingDir, cfg)
-      val tablePath = s"$warehouseDir/fact_telemetry_event"
-
-      // One pass over the flagged frame feeds both sinks.
-      val valid = valid0.persist()
-      val invalidCount = invalid.count()
-      val quarantinePath =
-        if (invalidCount > 0)
-          Some(ParquetTable.writeQuarantine(
-            invalid, s"$warehouseDir/quarantine", cfg.courseId, cfg.ingestDate, runId))
-        else None
-
-      val validCount = valid.count()
-      // M1/M2: dynamic partition overwrite = idempotent refresh of exactly
-      // the (course_id, event_date) partitions present in this ingest.
-      ParquetTable.refreshPartitions(
-        valid.withColumn("event_date",
-          coalesce(col("event_date"), lit("1900-01-01").cast("date"))),
-        tablePath, Seq("course_id", "event_date"))
-      valid.unpersist()
+      // The ETL runs once: an eager local checkpoint materializes the
+      // flagged frame, and the counts and both sinks read that copy. A
+      // checkpoint keeps the plan's AQE-coalesced partitioning, so the
+      // writes produce few, large files; a `persist`ed plan keeps its
+      // pre-coalesce shuffle partitions (canChangeCachedPlanOutputPartitioning
+      // is off) and would also leave a CacheManager entry to release.
+      val flagged = SilverEtl.flagged(SilverEtl.read(spark, landingDir), cfg)
+        .localCheckpoint()
+      val (validCount, invalidCount, quarantinePath) = try {
+        val counts = flagged
+          .agg(count_if(!col("is_invalid_coord")), count_if(col("is_invalid_coord")))
+          .head()
+        val (valid, invalid) = SilverEtl.splitFlagged(flagged)
+        val quarantinePath =
+          if (counts.getLong(1) > 0)
+            Some(ParquetTable.writeQuarantine(
+              invalid, s"$warehouseDir/quarantine", cfg.courseId, cfg.ingestDate, runId))
+          else None
+        // M1/M2: dynamic partition overwrite = idempotent refresh of exactly
+        // the (course_id, event_date) partitions present in this ingest.
+        ParquetTable.refreshPartitions(
+          valid.withColumn("event_date",
+            coalesce(col("event_date"), lit("1900-01-01").cast("date"))),
+          tablePath, Seq("course_id", "event_date"))
+        (counts.getLong(0), counts.getLong(1), quarantinePath)
+      } finally releaseCheckpoint(flagged)
 
       IngestionRegistry.log(spark, registry, cfg.courseId, cfg.ingestDate,
         "success", validCount, s"invalid=$invalidCount", runSeq + 1)
@@ -70,4 +78,9 @@ object SilverJob {
         throw e
     }
   }
+
+  /** Drops the checkpoint's blocks now rather than when the context
+    * cleaner notices the frame is gone. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
 }

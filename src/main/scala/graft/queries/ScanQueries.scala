@@ -40,7 +40,7 @@ object ScanQueries {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // S1 — file-format probe via binaryFile listing (etl.py:40-61): land a
+    // S1 — file-format probe via a FileSystem listing (etl.py:40-61): land a
     // JSON dir and a CSV dir, probe both, return what was detected.
     QueryDef(
       "s1_format_detect",

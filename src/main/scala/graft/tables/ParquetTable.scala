@@ -2,9 +2,9 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Maintenance operators M1–M7 (SURVEY §2.10) on plain-parquet tables.
   *
@@ -221,15 +221,15 @@ object ParquetTable extends TableFormat {
     path
   }
 
-  /** M6 — single-file JSON run summary (etl.py:687-703): one record,
-    * coalesce(1), observability path. */
+  /** M6 — single-file JSON run summary (etl.py:687-703): one record of
+    * string fields in sorted key order, coalesce(1), observability path.
+    * The schema is explicit, so no inference job runs, and the JSON writer
+    * does the escaping. */
   def writeRunSummary(spark: SparkSession, path: String, summary: Map[String, String]): Unit = {
-    import spark.implicits._
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val json = summary.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ", ", "}")
-    spark.read.json(Seq(json).toDS)
+    val (keys, values) = summary.toSeq.sortBy(_._1).unzip
+    spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(values)),
+        StructType(keys.map(StructField(_, StringType))))
       .coalesce(1).write.mode(SaveMode.Overwrite).json(path)
   }
 

@@ -1,9 +1,12 @@
 package graft.ingest
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Corpus
 import SilverEtl._
 
 /** Semantics of the Silver pipeline against the golf-domain fixtures —
@@ -167,6 +170,25 @@ class SilverEtlSpec extends SparkSpec {
   test("format detection picks json over csv (etl.py:40-61)") {
     assert(detectFileFormat(spark, res("/golf/json")) === "json")
     assert(detectFileFormat(spark, res("/golf/csv")) === "csv")
+  }
+
+  test("format detection skips `_` and `.` names and defaults to csv without throwing") {
+    val markers = Files.createTempDirectory("graft_detect")
+    Seq("_SUCCESS", "._SUCCESS.crc", ".part-00000.json.crc")
+      .foreach(n => Files.createFile(markers.resolve(n)))
+    assert(detectFileFormat(spark, markers.toString) === "csv")
+    // hidden and underscore-prefixed JSON names are not landing files
+    val mixed = Files.createTempDirectory("graft_detect")
+    Seq("_metadata.json", ".staged.json", "rounds.csv")
+      .foreach(n => Files.createFile(mixed.resolve(n)))
+    assert(detectFileFormat(spark, mixed.toString) === "csv")
+    assert(detectFileFormat(spark, s"$markers/missing") === "csv")
+  }
+
+  test("s1_format_detect gate matches its oracle row") {
+    val row = Corpus.queries("s1_format_detect")(spark, sfDir).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(row === Seq(("json", "csv"))) // SELECT 'json', 'csv'
   }
 
   test("empty-string normalization on seed text columns (dimensions.py:346-353)") {

@@ -224,9 +224,42 @@ class MaintenanceSpec extends SparkSpec {
     assert(table.count() === r1.validCount) // second run replaced, not duplicated
     val latest = IngestionRegistry.latest(spark, s"$warehouse/ingestion_log").collect()
     assert(latest.length === 1 && latest(0).getString(2) === "success")
-    // M6 run summary written and readable
-    val summary = spark.read.json(s"$warehouse/observability/run_id=run2")
-    assert(summary.select("valid_count").collect()(0).getString(0) === r1.validCount.toString)
+    // M6 run summary written and readable, every key and value intact
+    assert(readSummary(s"$warehouse/observability/run_id=run2") === Map(
+      "run_id" -> "run2", "course_id" -> "americanfalls",
+      "ingest_date" -> "2024-01-20", "landing_uri" -> landing,
+      "valid_count" -> r1.validCount.toString, "invalid_count" -> "0",
+      "table" -> s"$warehouse/fact_telemetry_event"))
+  }
+
+  /** The one run-summary record as key -> value. */
+  private def readSummary(path: String): Map[String, String] = {
+    val df = spark.read.json(path)
+    val rows = df.collect()
+    assert(rows.length === 1)
+    df.columns.map(c => c -> rows(0).getAs[String](c)).toMap
+  }
+
+  test("M6: run summary round-trips quotes, backslashes and tabs in its values") {
+    val path = s"${tmp()}/summary"
+    val summary = Map(
+      "run_id" -> "r1", "landing_uri" -> "s3://landing/we\"ird\\course",
+      "valid_count" -> "12", "note" -> "tab\there")
+    ParquetTable.writeRunSummary(spark, path, summary)
+    assert(readSummary(path) === summary)
+  }
+
+  test("a failed SilverJob propagates, logs failed, and leaves nothing cached") {
+    spark.catalog.clearCache() // frames other specs left cached are not this job's
+    val warehouse = tmp()
+    // a regular file where the silver table belongs fails the partition write
+    Files.writeString(java.nio.file.Paths.get(warehouse, "fact_telemetry_event"), "not a table")
+    val landing = getClass.getResource("/golf/json").toString.stripPrefix("file:")
+    val cfg = SilverEtl.SilverConfig("americanfalls", "2024-01-20")
+    intercept[Exception](SilverJob.run(spark, landing, warehouse, cfg, "runf", 400))
+    val latest = IngestionRegistry.latest(spark, s"$warehouse/ingestion_log").collect()
+    assert(latest.length === 1 && latest(0).getString(2) === "failed")
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("quarantined rows land under a run-scoped path (M5)") {
